@@ -24,7 +24,8 @@ import graft.pipeline.QualityPipeline
   *   1. read the pages table `(url, warc_ts, html, text, lang)`;
   *   2. [[QualityPipeline]] — the fused per-document quality filter;
   *   3. [[CheckpointedRun.run]] — resumable execution over `--partitions`
-  *      logical url-hash partitions with per-partition progress manifests
+  *      logical url-hash partitions, run as concurrent waves as wide as
+  *      the cluster's task slots, with per-partition progress manifests
   *      and stage metrics (O2-O4): re-running the SAME `--run-id` after a
   *      kill skips completed partitions;
   *   4. [[IcebergStyleTable.append]] — one atomic snapshot commit of the
@@ -101,7 +102,8 @@ object RunJob {
       "_committed.json")
 
   /** The whole job; `failAfter` is the kill-injection test hook
-    * (CheckpointedRun's — aborts after N fresh partitions). */
+    * (CheckpointedRun's — the first N pending partitions complete, none
+    * beyond them starts, then it throws). */
   def execute(spark: SparkSession, args: JobArgs,
               failAfter: Int = Int.MaxValue): JobResult = {
     graft.expr.GraftFunctions.register(spark)

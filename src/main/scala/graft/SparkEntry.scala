@@ -528,12 +528,14 @@ object SparkEntry {
     * band-bucket size cap → exact shingle-Jaccard ≥ 0.8 confirmation over
     * candidates only. Columns: id_a, id_b, n_inter, n_union.
     *
-    * Ordering contract: the bucket cap (64) bounds the quadratic band
-    * join and assumes EXACT dedup ran first (the standard pipeline order
-    * — `dedup_exact` is that stage), so a bucket larger than the cap is
-    * pathological boilerplate, not a legitimate duplicate cluster. At the
-    * verify/bench scales the largest legitimate bucket is 50 (sf0.1
-    * same-variant planted docs), under the cap. */
+    * Ordering contract: the bucket cap ([[MaxBandSize]]) bounds the
+    * quadratic band join and assumes EXACT dedup ran first (the standard
+    * pipeline order — `dedup_exact` is that stage), so a bucket larger
+    * than the cap is pathological boilerplate, not a legitimate
+    * duplicate cluster. At the verify/bench scales the largest legitimate
+    * bucket is 50 (sf0.1 same-variant planted docs), under the cap. */
+  final val MaxBandSize = 64
+
   /** The dedup_minhash_pairs body, public with the scale lever exposed:
     * `persistBands = true` caches the exploded band rows
     * (MEMORY_AND_DISK) across their three consumers — the 100 TB
@@ -622,21 +624,24 @@ object SparkEntry {
     // collect_list — plan preserved in plans/r06/dedup_minhash_pairs_mid
     // .txt); this shape cuts it to ONE evaluation and ONE shuffle:
     //   1. `count(*)` stays a native partial-aggregated count — the
-    //      2 <= bn <= 64 gate is decided on the exact count, unchanged
-    //      (a singleton band cannot form a pair; a hot band is dropped);
-    //   2. the member list is capped AT THE AGGREGATE (65 > 64): a kept
-    //      band (bn <= 64) provably never trims — its list is complete —
-    //      while a hot band costs at most 65 longs per partial buffer
-    //      and per map task on the wire, the same skew bound the
-    //      two-pass shape bought with its pre-filter;
+    //      2 <= bn <= MaxBandSize gate is decided on the exact count,
+    //      unchanged (a singleton band cannot form a pair; a hot band is
+    //      dropped);
+    //   2. the member list is capped AT THE AGGREGATE, one past the gate
+    //      (MaxBandSize + 1): a kept band (bn <= MaxBandSize) provably
+    //      never trims — its list is complete — while a hot band costs
+    //      at most MaxBandSize + 1 longs per partial buffer and per map
+    //      task on the wire, the same skew bound the two-pass shape
+    //      bought with its pre-filter;
     //   3. within-band pairs come from the same bounded in-list cross
-    //      (two Generates over <= 64-element lists).
+    //      (two Generates over <= MaxBandSize-element lists).
     // Same candidate pair set, same confirmed output (OpsSpec pair gates
     // incl. the 1000-identical-doc skew test + driver oracle at four
     // scale points).
     val cand = bandRows.groupBy("band")
-      .agg(count(lit(1)).as("bn"), bounded_ids(col("doc_id"), 65).as("ids"))
-      .filter(col("bn") <= 64 && col("bn") >= 2)
+      .agg(count(lit(1)).as("bn"),
+        bounded_ids(col("doc_id"), MaxBandSize + 1).as("ids"))
+      .filter(col("bn") <= MaxBandSize && col("bn") >= 2)
       .select(explode(col("ids")).as("id_a"), col("ids"))
       .select(col("id_a"), explode(col("ids")).as("id_b"))
       .filter(col("id_a") < col("id_b"))

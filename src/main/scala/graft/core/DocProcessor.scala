@@ -35,6 +35,12 @@ object DocProcessor {
       Heuristics.LangConfMin))
 
   def process(text: String): DocResult =
+    processScoped(text, StageTimers.Unscoped)
+
+  /** [[process]], also reporting the stage nanos into `scope` (the
+    * per-job timers of the caller; the JVM-wide [[StageTimers]] totals
+    * are fed either way). */
+  def processScoped(text: String, scope: StageSink): DocResult =
     try {
       val t0 = System.nanoTime()
       val (full, wordArr, startArr) = Tokenizer.tokenizeArrays(text)
@@ -60,12 +66,8 @@ object DocProcessor {
       val rules = Heuristics.evaluateWith(text, words, lang) ++
         pipelineRules(ppl, conf)
       val t5 = System.nanoTime()
-      StageTimers.add("tokenize", t1 - t0)
-      StageTimers.add("pii_scrub", t2 - t1)
-      StageTimers.add("langid", t3 - t2)
-      StageTimers.add("perplexity", t4 - t3)
-      StageTimers.add("heuristics", t5 - t4)
-      StageTimers.addDoc()
+      StageTimers.record(t1 - t0, t2 - t1, t3 - t2, t4 - t3, t5 - t4)
+      scope.record(t1 - t0, t2 - t1, t3 - t2, t4 - t3, t5 - t4)
       DocResult(full, scrubbed, matches,
         nRedacted, lang, conf, ppl, rules,
         keep = !rules.exists(_.fired), error = None)

@@ -130,8 +130,11 @@ object Kernels {
       labeled.count(_.detectedAs.isDefined))
   }
 
-  def pageProcess(v: UTF8String): InternalRow = {
-    val r = DocProcessor.process(v.toString)
+  def pageProcess(v: UTF8String): InternalRow =
+    pageProcess(v, StageTimers.Unscoped)
+
+  def pageProcess(v: UTF8String, scope: StageSink): InternalRow = {
+    val r = DocProcessor.processScoped(v.toString, scope)
     InternalRow(
       UTF8String.fromString(r.fullText),
       UTF8String.fromString(r.scrubbedText),
@@ -293,18 +296,22 @@ object Kernels {
     sig
   }
 
-  /** max(abs(x)) over a NON-EMPTY double array — exactly
-    * `array_max(transform(a, x -> abs(x)))` for null-free elements
+  /** max(abs(x)) over the non-null elements of a double array — exactly
+    * `array_max(transform(a, x -> abs(x)))`, which skips null elements
     * (max is order-independent; abs values are >= 0.0 or NaN, and
-    * `Double.compare` keeps NaN greatest like Spark's ordering, so the
-    * 0.0 seed is exact). The caller maps the empty array to null. */
+    * `Double.compare` keeps NaN greatest like Spark's ordering). Returns
+    * -1.0, which no abs value can be, when there is no non-null element:
+    * the caller maps it to null, as `array_max` does for an empty or
+    * all-null array. */
   def absMax(a: ArrayData): Double = {
     val n = a.numElements()
-    var m = 0.0
+    var m = -1.0
     var i = 0
     while (i < n) {
-      val v = math.abs(a.getDouble(i))
-      if (java.lang.Double.compare(v, m) > 0) m = v
+      if (!a.isNullAt(i)) {
+        val v = math.abs(a.getDouble(i))
+        if (java.lang.Double.compare(v, m) > 0) m = v
+      }
       i += 1
     }
     m
@@ -446,14 +453,32 @@ case class PiiProcess(child: Expression) extends StringKernelCodegenExpression {
 /** `graft_page_process(text)` — the fused whole-pipeline pass:
   * tokenize once → PII scan/refine/join/scrub + langid + perplexity +
   * lang-aware heuristics + keep/drop + full rule lineage, with per-row
-  * fault isolation (error column instead of stage failure, O1). */
-case class PageProcess(child: Expression) extends StringKernelCodegenExpression {
+  * fault isolation (error column instead of stage failure, O1).
+  *
+  * `timers`: the job-scoped stage timers this kernel also reports into
+  * (set by [[StageAccumulator.scope]]; a generated-code reference object,
+  * so the compiled class is shared by every scope). */
+case class PageProcess(child: Expression,
+                       timers: Option[StageAccumulator] = None)
+    extends StringKernelCodegenExpression {
   override def dataType: DataType = GraftSchemas.pageProcessStruct
-  override def nullSafeEval(v: Any): Any =
-    Kernels.pageProcess(v.asInstanceOf[UTF8String])
+  override def nullSafeEval(v: Any): Any = timers match {
+    case Some(acc) => Kernels.pageProcess(v.asInstanceOf[UTF8String], acc)
+    case None => Kernels.pageProcess(v.asInstanceOf[UTF8String])
+  }
   override protected def staticCall(c: String): String =
     s"graft.expr.Kernels.pageProcess($c)"
-  override protected def withNewChildInternal(c: Expression): PageProcess = copy(c)
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = timers match {
+    case Some(acc) =>
+      val ref = ctx.addReferenceObj("stageTimers", acc)
+      defineCodeGen(ctx, ev, c => s"graft.expr.Kernels.pageProcess($c, $ref)")
+    case None => super.doGenCode(ctx, ev)
+  }
+  // plan strings show the kernel, not the accumulator's running value
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  override protected def withNewChildInternal(c: Expression): PageProcess =
+    copy(child = c)
   override def prettyName: String = "graft_page_process"
 }
 
@@ -523,13 +548,13 @@ case class QualityRules(left: Expression, right: Expression)
   * costs ~10µs/pair at 64 dims; this is ~100ns — the difference between a
   * feasible and an infeasible pairwise stage (measured 135s → seconds on
   * a 13.5M-pair sweep). */
-/** `graft_absmax(emb)` — max(abs(x)) of ARRAY<DOUBLE> (DOUBLE; null for
-  * null input or the empty array, matching `array_max` on an empty
-  * `transform` result). Native whole-stage-codegen form of
+/** `graft_absmax(emb)` — max(abs(x)) of ARRAY<DOUBLE> (DOUBLE; null
+  * elements are skipped, and a null input or an array with no non-null
+  * element gives null, matching `array_max` on the `transform` result).
+  * Native whole-stage-codegen form of
   * `array_max(transform(emb, x -> abs(x)))`, whose per-element lambda
   * is CodegenFallback and evaluated interpreted in the int8-quantization
-  * scan. Element nulls are not expected (the input is a cast of the
-  * parquet float vectors) — same contract as [[CosineSim]]. */
+  * scan. */
 case class AbsMax(child: Expression) extends UnaryExpression
     with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType))
@@ -537,17 +562,14 @@ case class AbsMax(child: Expression) extends UnaryExpression
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    if (a.numElements() == 0) null else Kernels.absMax(a)
+    val m = Kernels.absMax(v.asInstanceOf[ArrayData])
+    if (m < 0) null else m
   }
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-      |if ($c.numElements() == 0) {
-      |  ${ev.isNull} = true;
-      |} else {
-      |  ${ev.value} = graft.expr.Kernels.absMax($c);
-      |}""".stripMargin)
+      |${ev.value} = graft.expr.Kernels.absMax($c);
+      |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
   override protected def withNewChildInternal(c: Expression): AbsMax = copy(c)
   override def prettyName: String = "graft_absmax"
 }

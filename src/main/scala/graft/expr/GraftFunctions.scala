@@ -40,11 +40,15 @@ object GraftFunctions {
     // aggregate: the analyzer wraps a bare AggregateFunction from the
     // registry in an AggregateExpression (same path as the built-ins)
     "graft_bounded_ids" -> { es =>
+      def notLiteral(got: Any) = new IllegalArgumentException(
+        s"graft_bounded_ids cap must be an integer literal, got $got")
+      // eval() on a non-foldable cap (a column) would throw an opaque
+      // Unevaluable error from inside the analyzer
+      if (!es(1).foldable) throw notLiteral(es(1).sql)
       BoundedIds(es(0), es(1).eval() match {
         case i: Int => i
         case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_bounded_ids cap must be an integer literal, got $other")
+        case other => throw notLiteral(other)
       }) })
 
   /** Register on an existing session (idempotent). */

@@ -2,10 +2,14 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.expr.StageAccumulator
 
 /** Resumable batch execution with per-partition progress manifests and
   * per-stage metrics (SURVEY §7.6; BASELINE.json: "checkpoints
@@ -23,10 +27,23 @@ import org.apache.spark.sql.functions._
   * kill can never leave a manifest without its data).
   *
   * Resume: list completed manifests, process only the missing partitions.
-  * Metrics: one JSON manifest per (run, partition) with row counters from
-  * `Dataset.observe` per stage (langid / perplexity / heuristics / scrub)
-  * plus wall time — the O4 commit-log analog, queryable as a table via
-  * [[metricsTable]].
+  *
+  * Waves: the pending partitions run concurrently from a driver thread
+  * pool `min(pending, sparkContext.defaultParallelism)` wide, so the FIFO
+  * scheduler always has a queued task for a slot that frees up (the
+  * data-stealing idea of DS2, at the resume-unit level). The resume unit
+  * is still one logical partition: a kill loses at most the partitions
+  * in flight at that moment, never a completed one.
+  *
+  * Metrics: one JSON manifest per (run, partition) — the O4 commit-log
+  * analog, queryable as a table via [[metricsTable]]. Its counters
+  * (rows, keep, error rows, and per stage: redactions, low-confidence
+  * langid, high perplexity, fired rules) are observed on the partition's
+  * own write (`Dataset.observe`, no read-back job), its per-stage
+  * `cpu_sec` comes from a [[graft.expr.StageAccumulator]] scoped to the
+  * partition's job (right on a cluster and under concurrent partitions),
+  * and `wall_sec` is the partition's elapsed time, including any wait
+  * for slots behind the partitions of its wave.
   */
 object CheckpointedRun {
 
@@ -54,8 +71,13 @@ object CheckpointedRun {
 
   /** Run `transform` over `input` split into `numPartitions` logical
     * partitions by `keyCol`; completed partitions are skipped on resume.
-    * `failAfter` (test hook) aborts after that many fresh partitions —
-    * the "killed run" of the resume test (SURVEY §5.4.6).
+    * `failAfter` (test hook) is the "killed run" of the resume test
+    * (SURVEY §5.4.6): the first `failAfter` pending partitions complete,
+    * none beyond them starts, and then the call throws.
+    *
+    * Failure: after the first partition fails no further partition
+    * starts; the ones in flight finish and write their manifests, and the
+    * original exception is rethrown.
     *
     * Scan discipline: the input is bucketed ONCE into a staged
     * Hive-partitioned copy (`_staged/run=<id>/_bucket=<k>`), so a fresh
@@ -227,77 +249,94 @@ object CheckpointedRun {
         spark.read.parquet(stagedPath)
     }
 
-    var fresh = 0
-    val results = (0 until numPartitions).map { k =>
-      if (done.contains(k)) PartitionResult(k, -1, skipped = true)
-      else {
-        if (fresh >= failAfter)
-          throw new RuntimeException(s"injected failure before partition $k")
-        fresh += 1
-        val st0 = graft.core.StageTimers.snapshot()
-        val t0 = System.nanoTime()
-        // filter on the Hive partition column prunes to one directory
-        val part = staged.filter(col("_bucket") === k).drop("_bucket")
-        val out = transform(part)
-        val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
-        out.write.mode("overwrite").parquet(outPath)
+    // One partition's whole unit of work: transform its bucket, write it
+    // with its counters observed on that write, then publish the
+    // manifest. A closure (not a method), so the jobs it starts carry
+    // `run`'s frames in their call sites.
+    val runPartition = (k: Int) => {
+      val t0 = System.nanoTime()
+      // filter on the Hive partition column prunes to one directory
+      val part = staged.filter(col("_bucket") === k).drop("_bucket")
+      val timers = new StageAccumulator
+      spark.sparkContext.register(timers)
+      val out = StageAccumulator.scope(transform(part), timers)
+      val outPath = Paths.get(root, s"run=$runId", s"partition=$k").toString
+      // Schema-tolerant + null-safe totals: a non-pipeline transform
+      // lacks the quality columns (its counters are 0), and a sum over an
+      // EMPTY partition is NULL — a bare getLong would throw AFTER the
+      // data committed but BEFORE the manifest, and resume would re-crash
+      // on the same partition forever
+      val cols = out.columns.toSet
+      def total(c: String)(v: Column): Column =
+        (if (cols(c)) coalesce(sum(v), lit(0L)) else lit(0L)).as(c)
+      def flag(pred: Column): Column = when(pred, 1L).otherwise(0L)
+      val m = IcebergStyleTable.writeObserved(out, outPath, Nil, Seq(
+        count(lit(1)).as("rows"),
+        total("keep")(flag(col("keep"))),
+        total("error")(flag(col("error").isNotNull)),
+        total("n_redacted")(col("n_redacted").cast("long")),
+        total("lang_conf")(flag(
+          col("lang_conf") < lit(graft.model.PagesSynth.LangConfMin))),
+        total("perplexity")(flag(
+          col("perplexity") > lit(graft.model.PagesSynth.PerplexityMax))),
+        total("rule_lineage")(
+          size(filter(col("rule_lineage"), r => r("fired"))).cast("long"))))
+      val rows = m.getLong(0)
+      val wall = (System.nanoTime() - t0) / 1e9
+      val stageNanos = timers.value._1
+      def sn(st: String): Double = stageNanos(st) / 1e9
 
-        // per-stage metrics from the committed output (one cheap scan of
-        // the partition's own parquet — no recompute of the pipeline).
-        // Schema-tolerant + null-safe: (a) sum() over an EMPTY partition
-        // (every row filtered, or fewer rows than partitions) returns
-        // NULL and a bare getLong would NPE AFTER the data committed but
-        // BEFORE the manifest — resume would then re-crash on the same
-        // partition forever; (b) a non-pipeline transform lacks the
-        // quality columns — its metrics degrade to zero instead of
-        // failing the run post-write
-        val written = spark.read.parquet(outPath)
-        val cols = written.columns.toSet
-        def m0(c: Column): Column = coalesce(c, lit(0L))
-        val m = written.agg(
-          count(lit(1)).as("rows"),
-          (if (cols("keep"))
-            m0(sum(when(col("keep"), 1L).otherwise(0L)))
-          else lit(0L)).as("n_keep"),
-          (if (cols("n_redacted")) m0(sum(col("n_redacted").cast("long")))
-          else lit(0L)).as("scrub_n_redacted"),
-          (if (cols("lang_conf"))
-            m0(sum(when(col("lang_conf") <
-              lit(graft.model.PagesSynth.LangConfMin), 1L).otherwise(0L)))
-          else lit(0L)).as("langid_n_low_conf"),
-          (if (cols("perplexity"))
-            m0(sum(when(col("perplexity") >
-              lit(graft.model.PagesSynth.PerplexityMax), 1L).otherwise(0L)))
-          else lit(0L)).as("perplexity_n_high"),
-          (if (cols("rule_lineage"))
-            m0(sum(size(filter(col("rule_lineage"), r => r("fired")))
-              .cast("long")))
-          else lit(0L)).as("heuristics_n_fired")).collect()(0)
-        val rows = m.getLong(0)
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (stageNanos, _) =
-          graft.core.StageTimers.delta(st0, graft.core.StageTimers.snapshot())
-        def sn(st: String): Double = stageNanos.getOrElse(st, 0L) / 1e9
+      val manifest =
+        s"""{"run_id":"$runId","partition":$k,"rows":$rows,
+           |"n_keep":${m.getLong(1)},"n_error":${m.getLong(2)},
+           |"stages":{"scrub":{"n_redacted":${m.getLong(3)},
+           |"cpu_sec":${sn("pii_scrub")}},
+           |"langid":{"n_low_conf":${m.getLong(4)},"cpu_sec":${sn("langid")}},
+           |"perplexity":{"n_high":${m.getLong(5)},
+           |"cpu_sec":${sn("perplexity")}},
+           |"heuristics":{"n_fired":${m.getLong(6)},
+           |"cpu_sec":${sn("heuristics")}},
+           |"tokenize":{"cpu_sec":${sn("tokenize")}}},
+           |"wall_sec":$wall}""".stripMargin.replace("\n", "")
+      // write-then-rename: manifest appears only after data committed
+      val tmp = progressDir(root, runId).resolve(s"partition=$k.tmp")
+      Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, progressDir(root, runId).resolve(s"partition=$k.json"),
+        StandardCopyOption.ATOMIC_MOVE)
+      PartitionResult(k, rows, skipped = false)
+    }
 
-        val manifest =
-          s"""{"run_id":"$runId","partition":$k,"rows":$rows,
-             |"n_keep":${m.getLong(1)},
-             |"stages":{"scrub":{"n_redacted":${m.getLong(2)},
-             |"cpu_sec":${sn("pii_scrub")}},
-             |"langid":{"n_low_conf":${m.getLong(3)},"cpu_sec":${sn("langid")}},
-             |"perplexity":{"n_high":${m.getLong(4)},
-             |"cpu_sec":${sn("perplexity")}},
-             |"heuristics":{"n_fired":${m.getLong(5)},
-             |"cpu_sec":${sn("heuristics")}},
-             |"tokenize":{"cpu_sec":${sn("tokenize")}}},
-             |"wall_sec":$wall}""".stripMargin.replace("\n", "")
-        // write-then-rename: manifest appears only after data committed
-        val tmp = progressDir(root, runId).resolve(s"partition=$k.tmp")
-        Files.write(tmp, manifest.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, progressDir(root, runId).resolve(s"partition=$k.json"),
-          StandardCopyOption.ATOMIC_MOVE)
-        PartitionResult(k, rows, skipped = false)
+    // Waves: every partition this call may run is queued on a driver
+    // pool as wide as the cluster's task slots, so a slot freed by one
+    // partition's job takes the next partition's tasks (Spark's FIFO
+    // scheduler serves the queued jobs in submission order). After the
+    // first failure no further partition starts; in-flight ones finish
+    // and publish their manifests; then the original exception is
+    // rethrown.
+    val pending = (0 until numPartitions).filterNot(done)
+    val todo = pending.take(failAfter)
+    val width = math.max(1,
+      math.min(todo.size, spark.sparkContext.defaultParallelism))
+    val pool = Executors.newFixedThreadPool(width)
+    val failure = new AtomicReference[Throwable]
+    val fresh = try {
+      val futures = todo.map { k =>
+        val unit: Callable[Option[PartitionResult]] = () =>
+          if (failure.get != null) None
+          else try Some(runPartition(k)) catch {
+            case e: Throwable => failure.compareAndSet(null, e); None
+          }
+        pool.submit(unit)
       }
+      futures.flatMap(_.get())
+    } finally pool.shutdown()
+    Option(failure.get).foreach(e => throw e)
+    if (todo.size < pending.size)
+      throw new RuntimeException(
+        s"injected failure before partition ${pending(todo.size)}")
+    val byPartition = fresh.map(r => r.partition -> r).toMap
+    val results = (0 until numPartitions).map { k =>
+      byPartition.getOrElse(k, PartitionResult(k, -1, skipped = true))
     }
     // every partition is complete: reclaim the staged input copy —
     // leaving it would permanently double storage for every finished run

@@ -2,13 +2,13 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Iceberg-style table layout without the Iceberg runtime jar
   * (SURVEY §7.4 — no Iceberg artifact exists in /opt/spark/jars or the
@@ -182,31 +182,31 @@ object IcebergStyleTable {
   private def q(s: String): String = "\"" + s.replace("\\", "\\\\")
     .replace("\"", "\\\"") + "\""
 
-  /** Write `df` with an observed row count (one scan, no re-read). */
-  private def writeCounted(df: DataFrame, version: Int,
-                           partitionCols: Seq[String], dest: String): Long = {
-    val spark = df.sparkSession
-    val obsName = s"graft_commit_${version}_${System.nanoTime()}"
-    @volatile var rows = -1L
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get(obsName).foreach(r => rows = r.getLong(0))
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      df.observe(obsName, count(lit(1)).as("rows"))
-        .write.mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(dest)
-      Shim.awaitListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
-    // safety net (observe delivery is asynchronous by contract): fall back
-    // to a footer-level count of the new generation only
-    if (rows < 0) rows = spark.read.parquet(dest).count()
-    rows
+  /** Upper bound on the wait for a write's observed metrics. The
+    * listener bus delivers them shortly after the write returns; past
+    * this bound (an event dropped from a full queue) the same aggregates
+    * are computed from the written files instead. */
+  final val ObservedMetricsWaitMillis = 60000L
+
+  private val observationIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** Write `df` as parquet under `dest` and return the aggregate columns
+    * `metrics`, observed on the write itself (`Dataset.observe`: one
+    * scan, no read-back job). Waits only for THIS write's observation —
+    * not for the whole listener bus, which concurrent writers keep busy.
+    * Null aggregates (a sum over no rows) are returned as null. */
+  private[io] def writeObserved(df: DataFrame, dest: String,
+                                partitionCols: Seq[String],
+                                metrics: Seq[Column]): Row = {
+    val obs = Observation(s"graft_write_${observationIds.incrementAndGet()}")
+    df.observe(obs, metrics.head, metrics.tail: _*)
+      .write.mode("overwrite")
+      .partitionBy(partitionCols: _*)
+      .parquet(dest)
+    Try(Await.result(obs.future, ObservedMetricsWaitMillis.millis))
+      .toOption.filter(_.length == metrics.size)
+      .getOrElse(df.sparkSession.read.parquet(dest)
+        .agg(metrics.head, metrics.tail: _*).head())
   }
 
   private def commitMetadata(root: String, version: Int, files: Seq[String],
@@ -253,7 +253,8 @@ object IcebergStyleTable {
       (partitionCols.map(col) :+
         pmod(xxhash64(col(saltCol)), lit(saltBuckets))): _*)
     val dest = dataDir(root).resolve(genName(version)).toString
-    val rowCount = writeCounted(salted, version, partitionCols, dest)
+    val rowCount = writeObserved(salted, dest, partitionCols,
+      Seq(count(lit(1)))).getLong(0)
 
     // schema metadata is written BEFORE the hint flip — once a reader can
     // see version N, every metadata file of N already exists
@@ -321,7 +322,8 @@ object IcebergStyleTable {
       .repartition((partitionCols.map(col) :+ salt): _*)
       .sortWithinPartitions(partitionCols.map(col): _*)
     val dest = dataDir(root).resolve(genName(version)).toString
-    val rowCount = writeCounted(compacted, version, partitionCols, dest)
+    val rowCount = writeObserved(compacted, dest, partitionCols,
+      Seq(count(lit(1)))).getLong(0)
 
     val added = listGenFiles(root, version)
     commitMetadata(root, version, files = added, added = added,

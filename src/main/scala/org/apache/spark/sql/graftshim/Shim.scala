@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Minimal bridge into `private[sql]` surface of Spark 4.x.
   *
@@ -18,6 +19,13 @@ object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over `df`'s analyzed plan rewritten by `f`
+    * (`Dataset.ofRows` is `private[sql]`). */
+  def mapPlan(df: DataFrame)(f: LogicalPlan => LogicalPlan): DataFrame =
+    Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      f(df.queryExecution.analyzed))
 
   /** Drain the listener bus so `QueryExecutionListener.onSuccess` (which
     * delivers `Dataset.observe` metrics asynchronously) has fired before

@@ -130,6 +130,51 @@ class ExprSpec extends AnyFunSuite {
     assert(sq(1L) == 2 && sq(2L) == 64 && sq(3L) == 65)
   }
 
+  test("graft_bounded_ids rejects a non-literal cap with its own " +
+    "IllegalArgumentException") {
+    spark.createDataFrame(Seq((1L, 100L), (1L, 101L))).toDF("band", "doc_id")
+      .createOrReplaceTempView("bids_cap_t")
+    val e = intercept[Exception] {
+      spark.sql("SELECT band, graft_bounded_ids(doc_id, doc_id) ids " +
+        "FROM bids_cap_t GROUP BY band").collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .toSeq
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("cap must be an integer literal")),
+      chain.map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString("\n"))
+  }
+
+  test("graft_absmax skips null elements like array_max(transform(abs)); " +
+    "an all-null array is null") {
+    val nul = null.asInstanceOf[java.lang.Double]
+    def d(x: Double): java.lang.Double = x
+    val arrays: Seq[Seq[java.lang.Double]] = Seq(Seq(nul), Seq(nul, nul),
+      Seq(nul, d(-3.0), nul), Seq(d(-0.0), nul), Seq(nul, d(Double.NaN)),
+      Seq(d(2.0), nul, d(-7.5), nul, d(1.0)),
+      Seq(nul, d(Double.NegativeInfinity)), Seq(d(-1e-300), nul))
+    val local = arrays.zipWithIndex
+      .map { case (a, i) => (i.toLong, a) }.toDF("id", "emb")
+    // the local relation is evaluated interpreted on the driver; the
+    // repartitioned one through whole-stage codegen on the executors
+    Seq(local, local.repartition(2)).foreach { df =>
+      val out = df.select(col("id"),
+        graft.expr.GraftFunctions.absmax(col("emb")).as("k"),
+        array_max(transform(col("emb"), x => abs(x))).as("h"))
+        .collect()
+      assert(out.length == arrays.size)
+      out.foreach { r =>
+        assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch at ${r.get(0)}")
+        if (!r.isNullAt(1))
+          assert(java.lang.Double.compare(r.getDouble(1), r.getDouble(2)) == 0,
+            s"value mismatch at ${r.get(0)}: ${r.getDouble(1)} vs " +
+              s"${r.getDouble(2)}")
+      }
+      assert(out.filter(_.isNullAt(1)).map(_.getLong(0)).sorted.toSeq ==
+        Seq(0L, 1L))
+    }
+  }
+
   test("graft_absmax == array_max(transform(abs)) — differential incl. " +
     "empty/null/edge values") {
     val rnd = new scala.util.Random(42)

@@ -259,6 +259,116 @@ class IcebergIoSpec extends AnyFunSuite {
     }
   }
 
+  /** A prebucketed copy of `n` synthetic pages over `p` buckets, ONE file
+    * per bucket (each partition job is then a single task). */
+  private def prebucketedPages(n: Long, p: Int): String = {
+    val pre = tmpDir("prebucketed_single")
+    PagesSynth.pages(spark, n, 4)
+      .withColumn("_bucket", pmod(xxhash64(col("url")), lit(p)))
+      .repartition(p, col("_bucket"))
+      .write.mode("overwrite").partitionBy("_bucket").parquet(pre)
+    pre
+  }
+
+  private def stageCpuSec(metrics: org.apache.spark.sql.DataFrame,
+                          stage: String): Seq[Double] =
+    metrics.select(col(s"stages.$stage.cpu_sec")).collect()
+      .map(_.getDouble(0)).toSeq
+
+  test("concurrent partitions: per-partition stage nanos are disjoint and " +
+      "sum to the JVM-wide StageTimers delta") {
+    val pre = prebucketedPages(240, 4)
+    val input = spark.read.parquet(pre).drop("_bucket")
+    val gated = (df: org.apache.spark.sql.DataFrame) =>
+      QualityPipeline(df).withColumn("_gate",
+        TwoPartitionsAtOnce.udf(pmod(xxhash64(col("url")), lit(4))))
+    TwoPartitionsAtOnce.reset()
+    val root = tmpDir("concurrent_timers")
+    val before = graft.core.StageTimers.snapshot()
+    val res = CheckpointedRun.run(spark, input, "url", gated, root, "c1",
+      numPartitions = 4, prebucketed = Some(pre))
+    val (globalNanos, globalDocs) =
+      graft.core.StageTimers.delta(before, graft.core.StageTimers.snapshot())
+    assert(res.count(!_.skipped) == 4)
+    // the tasks of two different partitions were running at the same time
+    assert(TwoPartitionsAtOnce.met, "partition jobs never overlapped")
+
+    val metrics = CheckpointedRun.metricsTable(spark, root, "c1")
+    assert(globalDocs == metrics.agg(sum("rows")).head().getLong(0))
+    val manifestStage = Map("tokenize" -> "tokenize",
+      "pii_scrub" -> "scrub", "langid" -> "langid",
+      "perplexity" -> "perplexity", "heuristics" -> "heuristics")
+    graft.core.StageTimers.stages.foreach { st =>
+      val perPartition = stageCpuSec(metrics, manifestStage(st))
+      assert(perPartition.size == 4)
+      // each partition's time is its own: the per-partition parts add up
+      // to the JVM total exactly (a snapshot delta per partition would
+      // count every overlapping partition's time twice)
+      assert(math.abs(perPartition.sum - globalNanos(st) / 1e9) < 1e-6,
+        s"$st: ${perPartition.sum} vs ${globalNanos(st) / 1e9}")
+      assert(perPartition.forall(_ > 0.0), s"$st: $perPartition")
+    }
+  }
+
+  test("a partition whose transform throws: the others commit, the " +
+      "original exception surfaces, and resume recomputes only it") {
+    val pre = prebucketedPages(200, 4)
+    val input = spark.read.parquet(pre).drop("_bucket")
+    val poisoned = (df: org.apache.spark.sql.DataFrame) =>
+      QualityPipeline(df).withColumn("_poison",
+        PoisonLastPartition.udf(pmod(xxhash64(col("url")), lit(4))))
+    val root = tmpDir("poisoned")
+    val e = intercept[Exception] {
+      CheckpointedRun.run(spark, input, "url", poisoned, root, "p1",
+        numPartitions = 4, prebucketed = Some(pre))
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains(PoisonLastPartition.Message)), e)
+    assert(CheckpointedRun.completedPartitions(root, "p1") == Set(0, 1, 2))
+
+    // resume with a healthy transform that marks some rows as errors
+    val withErrors = (df: org.apache.spark.sql.DataFrame) =>
+      QualityPipeline(df).withColumn("error",
+        when(pmod(xxhash64(col("url"), lit(7L)), lit(5)) === 0,
+          lit("InjectedError: test")).otherwise(col("error")))
+    val res = CheckpointedRun.run(spark, input, "url", withErrors, root,
+      "p1", numPartitions = 4, prebucketed = Some(pre))
+    assert(res.filter(!_.skipped).map(_.partition) == Seq(3))
+    val out = CheckpointedRun.output(spark, root, "p1")
+    assert(out.count() == 200L &&
+      out.select(countDistinct("url")).head().getLong(0) == 200L)
+    // n_error counts the partition's non-null error rows
+    val m = CheckpointedRun.metricsTable(spark, root, "p1")
+      .filter(col("partition") === 3)
+      .select("rows", "n_error").head()
+    val part3 = out.filter(pmod(xxhash64(col("url")), lit(4)) === 3)
+    assert(m.getLong(0) == part3.count())
+    assert(m.getLong(1) == part3.filter(col("error").isNotNull).count())
+    assert(m.getLong(1) > 0L)
+  }
+
+  test("failAfter = N: exactly the first N pending partitions run, none " +
+      "beyond them starts") {
+    val pre = prebucketedPages(120, 4)
+    val input = spark.read.parquet(pre).drop("_bucket")
+    val transform = (df: org.apache.spark.sql.DataFrame) => QualityPipeline(df)
+    val root = tmpDir("fail_after")
+    intercept[RuntimeException] {
+      CheckpointedRun.run(spark, input, "url", transform, root, "f1",
+        numPartitions = 4, failAfter = 2)
+    }
+    assert(CheckpointedRun.completedPartitions(root, "f1") == Set(0, 1))
+    assert(!Files.exists(Paths.get(root, "run=f1", "partition=2")))
+    assert(!Files.exists(Paths.get(root, "run=f1", "partition=3")))
+    // the next kill counts from the partitions still pending
+    intercept[RuntimeException] {
+      CheckpointedRun.run(spark, input, "url", transform, root, "f1",
+        numPartitions = 4, failAfter = 1)
+    }
+    assert(CheckpointedRun.completedPartitions(root, "f1") == Set(0, 1, 2))
+  }
+
   test("compaction: fewer files, same rows, atomic snapshot flip") {
     val root = tmpDir("compact")
     val df = QualityPipeline(PagesSynth.pages(spark, 400, 4))
@@ -289,4 +399,33 @@ class IcebergIoSpec extends AnyFunSuite {
       .select(countDistinct("file")).head().getLong(0)
     assert(files >= 2, s"hot host $hot landed in $files file(s)")
   }
+}
+
+/** Executor-side gate (local mode: the test JVM): the first rows wait
+  * until rows of a second partition have arrived too, so the test passes
+  * only if two partition jobs ran their tasks at the same time. The wait
+  * is bounded once for the whole run: a serial loop gives up after it
+  * and fails the test instead of hanging it. */
+object TwoPartitionsAtOnce {
+  private val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+  @volatile private var gaveUp = false
+  def met: Boolean = seen.size >= 2 && !gaveUp
+  def reset(): Unit = { seen.clear(); gaveUp = false }
+  val udf = org.apache.spark.sql.functions.udf { (k: Long) =>
+    seen.add(k)
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (seen.size < 2 && !gaveUp && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    if (seen.size < 2) gaveUp = true
+    k
+  }.asNondeterministic()
+}
+
+/** Fails every task of logical partition 3 (of 4). */
+object PoisonLastPartition {
+  final val Message = "poisoned partition 3"
+  val udf = org.apache.spark.sql.functions.udf { (k: Long) =>
+    if (k == 3L) throw new IllegalStateException(Message)
+    k
+  }.asNondeterministic()
 }

@@ -103,6 +103,32 @@ class PlanAuditSpec extends AnyFunSuite {
       s"fused kernel outside WSCG:\n${p.take(3000)}")
   }
 
+  test("job-scoped stage timers keep the fused kernel inside whole-stage " +
+      "codegen: the generated code compiles and fills the accumulator") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val dir = java.nio.file.Files.createTempDirectory("planaudit_scoped")
+    graft.model.PagesSynth.pages(spark, 50, 2, validated = false)
+      .write.mode("overwrite").parquet(dir.toString)
+    val acc = new graft.expr.StageAccumulator
+    spark.sparkContext.register(acc)
+    val df = graft.expr.StageAccumulator.scope(
+      graft.pipeline.QualityPipeline(spark.read.parquet(dir.toString)), acc)
+    val plan = df.queryExecution.executedPlan
+    val p = plan.toString
+    assert(p.linesIterator.find(_.contains("graft_page_process"))
+      .exists(_.contains("*(")), s"scoped kernel outside WSCG:\n${p.take(3000)}")
+    // a compile error would otherwise fall back to the interpreted path
+    // silently
+    plan.collect { case w: WholeStageCodegenExec => w }
+      .foreach(w => CodeGenerator.compile(w.doCodeGen()._2))
+    // every output row runs the kernel once (count() would prune it)
+    val rows = df.collect().length.toLong
+    val (nanos, docs) = acc.value
+    assert(docs == rows && rows > 0)
+    assert(nanos.values.forall(_ > 0L), nanos)
+  }
+
   test("text_token_counts: BPE counting is a native expression in the " +
       "scan projection — no join, no shuffle") {
     val p = plan("text_token_counts")

@@ -65,6 +65,36 @@ class RunJobSpec extends AnyFunSuite {
     assert(metrics.agg(sum("rows")).head().getLong(0) == 300)
   }
 
+  test("manifest counters equal a brute-force aggregation over the " +
+      "committed table") {
+    val in = writeInput(300)
+    val args = RunJob.JobArgs(in, tmpDir("runjob_out"), "job_m",
+      partitions = 6, saltBuckets = 4, shufflePartitions = 4)
+    RunJob.execute(spark, args)
+    val fromManifests = CheckpointedRun.metricsTable(spark,
+      RunJob.workRoot(args), "job_m").agg(
+      sum("rows"), sum("n_keep"), sum("n_error"),
+      sum("stages.scrub.n_redacted"), sum("stages.langid.n_low_conf"),
+      sum("stages.perplexity.n_high"), sum("stages.heuristics.n_fired"))
+      .head()
+    val fromTable = IcebergStyleTable.read(spark, RunJob.tableRoot(args))
+      .agg(count(lit(1)),
+        sum(when(col("keep"), 1L).otherwise(0L)),
+        sum(when(col("error").isNotNull, 1L).otherwise(0L)),
+        sum(col("n_redacted").cast("long")),
+        sum(when(col("lang_conf") < lit(PagesSynth.LangConfMin), 1L)
+          .otherwise(0L)),
+        sum(when(col("perplexity") > lit(PagesSynth.PerplexityMax), 1L)
+          .otherwise(0L)),
+        sum(size(filter(col("rule_lineage"), r => r("fired"))).cast("long")))
+      .head()
+    assert(fromManifests.getLong(0) == 300L)
+    (0 until 7).foreach { i =>
+      assert(fromManifests.getLong(i) == fromTable.getLong(i),
+        s"counter $i: manifests $fromManifests vs table $fromTable")
+    }
+  }
+
   test("input may be an Iceberg-style table root: rows resolved through " +
       "the snapshot manifest") {
     val tableIn = tmpDir("runjob_table_in")

@@ -23,6 +23,15 @@ STATUS=$(grep -o '{"run_id":"smoke1".*}' "$WORK/run.log" | tail -1)
 echo "status: $STATUS"
 echo "$STATUS" | grep -q '"committed_this_run":true'
 echo "$STATUS" | grep -q '"partitions_fresh":8'
+# the 8 partitions ran 4 at a time on local[4]: their manifests' row
+# counts (observed on each partition's write) must add up to the table
+MANIFESTS=("$WORK"/job/work/_progress/run=smoke1/partition=*.json)
+test "${#MANIFESTS[@]}" -eq 8
+MROWS=$(cat "${MANIFESTS[@]}" | grep -o '"rows":[0-9]*' \
+  | awk -F: '{s += $2} END {print s}')
+TROWS=$(echo "$STATUS" | grep -o '"table_rows":[0-9]*' | cut -d: -f2)
+echo "manifest rows: $MROWS, table_rows: $TROWS"
+test "$MROWS" = "$TROWS"
 # re-submit: exactly-once — resume must be a no-op with the same rows
 "$SPARK_HOME/bin/spark-submit" --master 'local[4]' \
   --class graft.RunJob "$JAR" \
